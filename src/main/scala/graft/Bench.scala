@@ -457,8 +457,9 @@ object Bench {
   /** Drop every persisted block in the session — Dataset caches AND
     * RDD-level persists (the HNSW shard graphs) — and nudge the
     * collector. Correct regardless of stragglers: an unpersisted
-    * handle recomputes lazily; only timing could suffer, and the
-    * cache-free section that follows never touches one.
+    * handle recomputes lazily (a Dataset memo is re-persisted on its
+    * next `IndexCache.getOrPersist` hit); only timing could suffer,
+    * and the cache-free section that follows never touches one.
     */
   private def releaseCaches(spark: SparkSession): Unit = {
     spark.catalog.clearCache()

@@ -3,7 +3,6 @@ package graft.knn
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.IndexCache
 
@@ -241,6 +240,25 @@ object IvfKnn {
       Seq("dist" -> true, "vec_id" -> true), k)
   }
 
+  /** Default list and probe counts for an index over `n` vectors:
+    * sqrt(n) lists (at least 4), half of them probed (at least 2). A
+    * positive argument overrides its default.
+    */
+  private[knn] def listsAndProbes(n: Long, nCentroids: Int, nprobe: Int): (Int, Int) = {
+    val nC = if (nCentroids > 0) nCentroids
+             else math.max(4, math.sqrt(n.toDouble).toInt)
+    (nC, if (nprobe > 0) nprobe else math.max(2, nC / 2))
+  }
+
+  /** The memoized inverted file over `dir`'s base split — the ONE
+    * builder of the `ivf:` family (batch and lifecycle share it).
+    */
+  private def cachedIndex(spark: SparkSession, dir: String, nC: Int): IvfIndex =
+    IndexCache.getOrBuild(spark, s"ivf:$dir:$nC") {
+      val ix = buildIndex(ExactKnn.split(spark, dir)._1, nC)
+      ix.copy(assigned = IndexCache.materialize(ix.assigned))
+    }
+
   /** Declared end-to-end IVF lifecycle: build (or reuse) the index,
     * [[saveIndex]] it once per dataset (inverted file PARTITIONED BY
     * cid), [[loadIndex]] the checkpoint, and search every held-out
@@ -249,27 +267,42 @@ object IvfKnn {
     */
   def topKBatchLifecycle(spark: SparkSession, dir: String, k: Int = 10,
       nCentroids: Int = 0, nprobe: Int = 0): DataFrame = {
-    val (base, queries, _, n) = ExactKnn.split(spark, dir)
-    val nC = if (nCentroids > 0) nCentroids
-             else math.max(4, math.sqrt(n.toDouble).toInt)
-    val nP = if (nprobe > 0) nprobe else math.max(2, nC / 2)
-    val index = IndexCache.getOrBuild(spark, s"ivf:$dir:$nC") {
-      val cs = trainCentroids(base, nC).map(_.toArray).toArray
-      val a = assignCids(base, cs).persist(StorageLevel.MEMORY_AND_DISK)
-      a.count()
-      IvfIndex(cs, a)
-    }
+    val (_, queries, _, n) = ExactKnn.split(spark, dir)
+    val (nC, nP) = listsAndProbes(n, nCentroids, nprobe)
     // one-time checkpoint per (dataset, nC): the inverted-file write is
     // index publication (bench_build_ivf_ckpt pays it), so the declared
     // query's time measures load + partition-pruned probe
     val path = IndexCache.getOrBuild(spark, s"ivf-ckpt:$dir:$nC") {
       val p = sys.props.getOrElse("java.io.tmpdir", "/tmp") +
         s"/graft-ivf-lifecycle-${Integer.toHexString(dir.hashCode)}-$nC"
-      saveIndex(index, p)
+      saveIndex(cachedIndex(spark, dir, nC), p)
       p
     }
     val reloaded = loadIndex(spark, path)
     searchIndexDF(reloaded, queries, k, nP)
+  }
+
+  /** The mutation rows' shared state: the embeddings, their count, the
+    * list count, and the memoized after-insert index — centroids
+    * trained on the first 90% prefix, the 90–95% slab added through
+    * [[insertIntoIndex]]. The ONE builder of the `ivf-ins:` family.
+    */
+  private def insertedIndex(spark: SparkSession, dir: String,
+      nCentroids: Int): (DataFrame, Long, Int, IvfIndex) = {
+    import graft.functions.VectorFunctions.toDoubleArray
+    val emb = graft.Tables.embeddings(spark, dir)
+      .select(col("vec_id"), toDoubleArray(col("embedding")).as("emb"))
+    val n = emb.count()
+    val s90 = math.round(0.90 * n)
+    val s95 = math.round(0.95 * n)
+    val (nC, _) = listsAndProbes(s90, nCentroids, 0)
+    val index = IndexCache.getOrBuild(spark, s"ivf-ins:$dir:$nC") {
+      val grown = insertIntoIndex(
+        buildIndex(emb.filter(col("vec_id") < s90), nC),
+        emb.filter(col("vec_id") >= s90 && col("vec_id") < s95))
+      grown.copy(assigned = IndexCache.materialize(grown.assigned))
+    }
+    (emb, n, nC, index)
   }
 
   /** `insert_many` into a BUILT IVF index, then search (the reference's
@@ -288,22 +321,8 @@ object IvfKnn {
     */
   def topKAfterInsert(spark: SparkSession, dir: String, k: Int = 10,
       nq: Int = 20, nCentroids: Int = 0): DataFrame = {
-    import graft.functions.VectorFunctions.toDoubleArray
-    val emb = graft.Tables.embeddings(spark, dir)
-      .select(col("vec_id"), toDoubleArray(col("embedding")).as("emb"))
-    val n = emb.count()
-    val s90 = math.round(0.90 * n)
+    val (emb, n, nC, index) = insertedIndex(spark, dir, nCentroids)
     val s95 = math.round(0.95 * n)
-    val nC = if (nCentroids > 0) nCentroids
-             else math.max(4, math.sqrt(s90.toDouble).toInt)
-    val index = IndexCache.getOrBuild(spark, s"ivf-ins:$dir:$nC") {
-      val built = buildIndex(emb.filter(col("vec_id") < s90), nC)
-      val grown = insertIntoIndex(built,
-        emb.filter(col("vec_id") >= s90 && col("vec_id") < s95))
-      val a = grown.assigned.persist(StorageLevel.MEMORY_AND_DISK)
-      a.count()
-      grown.copy(assigned = a)
-    }
     val queries = emb.filter(col("vec_id") >= s95 && col("vec_id") < s95 + nq)
     searchIndexDF(index, queries, k, nprobe = nC)
   }
@@ -322,53 +341,29 @@ object IvfKnn {
     */
   def topKAfterDelete(spark: SparkSession, dir: String, k: Int = 10,
       nq: Int = 20, nCentroids: Int = 0): DataFrame = {
-    import graft.functions.VectorFunctions.toDoubleArray
-    val emb = graft.Tables.embeddings(spark, dir)
-      .select(col("vec_id"), toDoubleArray(col("embedding")).as("emb"))
-    val n = emb.count()
+    val (emb, n, nC, grown) = insertedIndex(spark, dir, nCentroids)
     val s80 = math.round(0.80 * n)
     val s90 = math.round(0.90 * n)
     val s95 = math.round(0.95 * n)
-    val nC = if (nCentroids > 0) nCentroids
-             else math.max(4, math.sqrt(s90.toDouble).toInt)
-    val grown = IndexCache.getOrBuild(spark, s"ivf-ins:$dir:$nC") {
-      val built = buildIndex(emb.filter(col("vec_id") < s90), nC)
-      val g = insertIntoIndex(built,
-        emb.filter(col("vec_id") >= s90 && col("vec_id") < s95))
-      val a = g.assigned.persist(StorageLevel.MEMORY_AND_DISK)
-      a.count()
-      g.copy(assigned = a)
-    }
     val shrunk = IndexCache.getOrBuild(spark, s"ivf-del:$dir:$nC") {
-      val a = graft.sources.Ingest.deleteByKey(grown.assigned,
+      grown.copy(assigned = IndexCache.materialize(
+        graft.sources.Ingest.deleteByKey(grown.assigned,
           emb.filter(col("vec_id") >= s80 && col("vec_id") < s90)
-            .select(col("vec_id")), "vec_id")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      a.count()
-      grown.copy(assigned = a)
+            .select(col("vec_id")), "vec_id")))
     }
     val queries = emb.filter(col("vec_id") >= s95 && col("vec_id") < s95 + nq)
     searchIndexDF(shrunk, queries, k, nprobe = nC)
   }
 
   /** Top-k for every held-out query, probing `nprobe` of `nCentroids`
-    * clusters (defaults: sqrt(n) centroids, a quarter of them probed).
+    * clusters (defaults: sqrt(n) centroids, half of them probed).
     * Output: (qid, vec_id, dist rounded 6, rk) — same shape as
     * [[ExactKnn.topKBatch]] for direct recall evaluation.
     */
   def topKBatch(spark: SparkSession, dir: String, k: Int = 10,
       nCentroids: Int = 0, nprobe: Int = 0): DataFrame = {
-    val (base, queries, _, n) = ExactKnn.split(spark, dir)
-    val nC = if (nCentroids > 0) nCentroids
-             else math.max(4, math.sqrt(n.toDouble).toInt)
-    val nP = if (nprobe > 0) nprobe else math.max(2, nC / 2)
-
-    val index = IndexCache.getOrBuild(spark, s"ivf:$dir:$nC") {
-      val cs = trainCentroids(base, nC).map(_.toArray).toArray
-      val a = assignCids(base, cs).persist(StorageLevel.MEMORY_AND_DISK)
-      a.count() // materialize the inverted file once
-      IvfIndex(cs, a)
-    }
-    searchIndexDF(index, queries, k, nP)
+    val (_, queries, _, n) = ExactKnn.split(spark, dir)
+    val (nC, nP) = listsAndProbes(n, nCentroids, nprobe)
+    searchIndexDF(cachedIndex(spark, dir, nC), queries, k, nP)
   }
 }

@@ -2,7 +2,6 @@ package graft.knn
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.IndexCache
 
@@ -40,9 +39,7 @@ object IvfPqKnn {
       nCentroids: Int = 0, nprobe: Int = 0, m: Int = 8, ksub: Int = 256,
       overfetch: Int = 16): DataFrame = {
     val (base, queries, _, n) = ExactKnn.split(spark, dir)
-    val nC = if (nCentroids > 0) nCentroids
-             else math.max(4, math.sqrt(n.toDouble).toInt)
-    val nP = if (nprobe > 0) nprobe else math.max(2, nC / 2)
+    val (nC, nP) = IvfKnn.listsAndProbes(n, nCentroids, nprobe)
     val (centroids, cb, lists) = builtIndex(spark, base, dir, nC, m, ksub)
     searchLists(spark, centroids, cb, lists, base, queries, k, nP, ksub,
       overfetch)
@@ -57,11 +54,8 @@ object IvfPqKnn {
     IndexCache.getOrBuild(spark, s"ivfpq:$dir:$nC:$m:$ksub") {
       val cs = IvfKnn.trainCentroids(base, nC).map(_.toArray).toArray
       val books = PqKnn.trainCodebooks(base, m, ksub)
-      val coded = PqKnn.encode(base, books)
-        .join(IvfKnn.assignCids(base, cs).select("vec_id", "cid"), "vec_id")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      coded.count()
-      (cs, books, coded)
+      (cs, books, IndexCache.materialize(PqKnn.encode(base, books)
+        .join(IvfKnn.assignCids(base, cs).select("vec_id", "cid"), "vec_id")))
     }
 
   /** The search body shared by the in-memory and reloaded paths (the
@@ -147,9 +141,7 @@ object IvfPqKnn {
       nCentroids: Int = 0, nprobe: Int = 0, m: Int = 8, ksub: Int = 256,
       overfetch: Int = 16): DataFrame = {
     val (base, queries, _, n) = ExactKnn.split(spark, dir)
-    val nC = if (nCentroids > 0) nCentroids
-             else math.max(4, math.sqrt(n.toDouble).toInt)
-    val nP = if (nprobe > 0) nprobe else math.max(2, nC / 2)
+    val (nC, nP) = IvfKnn.listsAndProbes(n, nCentroids, nprobe)
     val path = IndexCache.getOrBuild(spark, s"ivfpq-ckpt:$dir:$nC:$m:$ksub") {
       val (cs, cb, lists) = builtIndex(spark, base, dir, nC, m, ksub)
       val p = sys.props.getOrElse("java.io.tmpdir", "/tmp") +
@@ -159,10 +151,8 @@ object IvfPqKnn {
     }
     val (cs, cb, lists) = IndexCache.getOrBuild(spark,
       s"ivfpq-reloaded:$dir:$nC:$m:$ksub") {
-      val (c, b, l0) = loadIndex(spark, path)
-      val l = l0.persist(StorageLevel.MEMORY_AND_DISK)
-      l.count()
-      (c, b, l)
+      val (c, b, l) = loadIndex(spark, path)
+      (c, b, IndexCache.materialize(l))
     }
     searchLists(spark, cs, cb, lists, base, queries, k, nP, ksub, overfetch)
   }

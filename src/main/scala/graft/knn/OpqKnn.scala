@@ -2,7 +2,6 @@ package graft.knn
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.IndexCache
 
@@ -80,9 +79,7 @@ object OpqKnn {
       val rBase = RandomProjection.project(base, rot)
         .select(col("vec_id"), col("pvec").as("emb"))
       val b = PqKnn.trainCodebooks(rBase, m, ksub)
-      val enc = PqKnn.encode(rBase, b).persist(StorageLevel.MEMORY_AND_DISK)
-      enc.count()
-      (b, enc)
+      (b, IndexCache.materialize(PqKnn.encode(rBase, b)))
     }
   }
 
@@ -211,10 +208,8 @@ object OpqKnn {
     }
     val (rot, cb, codes) = IndexCache.getOrBuild(spark,
       s"opq-reloaded:$dir:$m:$ksub") {
-      val (r, c, enc0) = loadIndex(spark, path)
-      val enc = enc0.persist(StorageLevel.MEMORY_AND_DISK)
-      enc.count()
-      (r, c, enc)
+      val (r, c, enc) = loadIndex(spark, path)
+      (r, c, IndexCache.materialize(enc))
     }
     val rQueries = RandomProjection.project(queries, rot)
       .select(col("vec_id"), col("pvec").as("emb"))

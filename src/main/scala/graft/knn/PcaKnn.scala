@@ -2,7 +2,6 @@ package graft.knn
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.IndexCache
 
@@ -53,16 +52,19 @@ object PcaKnn {
     */
   def topKBatch(spark: SparkSession, dir: String, k: Int = 10,
       outDim: Int = 32, overfetch: Int = 16): DataFrame = {
-    val matrix = basis(spark, dir, outDim)
-    val pBase = IndexCache.getOrBuild(spark, s"pca:$dir:$outDim") {
-      val (base, _, _, _) = ExactKnn.split(spark, dir)
-      val p = RandomProjection.project(base, matrix)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      p.count()
-      p
-    }
-    search(spark, dir, matrix, pBase, k, overfetch)
+    search(spark, dir, basis(spark, dir, outDim),
+      projectedBase(spark, dir, outDim), k, overfetch)
   }
+
+  /** The base split projected through [[basis]], memoized — the ONE
+    * builder of the `pca:` family (batch and lifecycle share it).
+    */
+  private def projectedBase(spark: SparkSession, dir: String,
+      outDim: Int): DataFrame =
+    IndexCache.getOrPersist(spark, s"pca:$dir:$outDim") {
+      RandomProjection.project(ExactKnn.split(spark, dir)._1,
+        basis(spark, dir, outDim))
+    }
 
   /** Shared mine + re-rank body: projected-space bounded-heap candidate
     * mining, then exact re-rank of queries × k·overfetch rows.
@@ -126,25 +128,15 @@ object PcaKnn {
   def topKBatchLifecycle(spark: SparkSession, dir: String, k: Int = 10,
       outDim: Int = 32, overfetch: Int = 16): DataFrame = {
     val path = IndexCache.getOrBuild(spark, s"pca-ckpt:$dir:$outDim") {
-      val matrix = basis(spark, dir, outDim)
-      val pBase = IndexCache.getOrBuild(spark, s"pca:$dir:$outDim") {
-        val (base, _, _, _) = ExactKnn.split(spark, dir)
-        val p = RandomProjection.project(base, matrix)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        p.count()
-        p
-      }
       val p = sys.props.getOrElse("java.io.tmpdir", "/tmp") +
         s"/graft-pca-lifecycle-${Integer.toHexString(dir.hashCode)}-$outDim"
-      saveIndex(matrix, pBase, p)
+      saveIndex(basis(spark, dir, outDim), projectedBase(spark, dir, outDim), p)
       p
     }
     val (matrix, pBase) = IndexCache.getOrBuild(spark,
       s"pca-reloaded:$dir:$outDim") {
-      val (m, p0) = loadIndex(spark, path)
-      val p = p0.persist(StorageLevel.MEMORY_AND_DISK)
-      p.count()
-      (m, p)
+      val (m, p) = loadIndex(spark, path)
+      (m, IndexCache.materialize(p))
     }
     search(spark, dir, matrix, pBase, k, overfetch)
   }

@@ -2,7 +2,6 @@ package graft.knn
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.IndexCache
 
@@ -204,9 +203,7 @@ object PqKnn {
     val (base, _, _, _) = ExactKnn.split(spark, dir)
     IndexCache.getOrBuild(spark, s"pq:$dir:$m:$ksub") {
       val b = trainCodebooks(base, m, ksub)
-      val enc = encode(base, b).persist(StorageLevel.MEMORY_AND_DISK)
-      enc.count()
-      (b, enc)
+      (b, IndexCache.materialize(encode(base, b)))
     }
   }
 
@@ -336,10 +333,8 @@ object PqKnn {
     }
     val (cb, codes) = IndexCache.getOrBuild(spark,
       s"pq-reloaded:$dir:$m:$ksub") {
-      val (c, enc0) = loadIndex(spark, path)
-      val enc = enc0.persist(StorageLevel.MEMORY_AND_DISK)
-      enc.count()
-      (c, enc)
+      val (c, enc) = loadIndex(spark, path)
+      (c, IndexCache.materialize(enc))
     }
     searchCodes(cb, codes, base, queries, k, overfetch)
   }

@@ -2,7 +2,6 @@ package graft.knn
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.IndexCache
 
@@ -120,9 +119,7 @@ object SqKnn {
     val (base, queries, _, _) = ExactKnn.split(spark, dir)
     val (bounds, codes) = IndexCache.getOrBuild(spark, s"sq:$dir") {
       val b = trainBounds(base)
-      val enc = encode(base, b).persist(StorageLevel.MEMORY_AND_DISK)
-      enc.count()
-      (b, enc)
+      (b, IndexCache.materialize(encode(base, b)))
     }
     val bcBounds = spark.sparkContext.broadcast(bounds)
     val codesRdd = codes.as[(Long, Array[Byte])].rdd

@@ -102,9 +102,8 @@ object VamanaKnn {
       s"vamana-ins:$dir:$shards") {
       val built = buildIndex(emb.filter(col("vec_id") < s90), shards)
       val grown = insertIntoIndex(built,
-        emb.filter(col("vec_id") >= s90 && col("vec_id") < s95)).persist()
-      grown.graphs.count()
-      grown
+        emb.filter(col("vec_id") >= s90 && col("vec_id") < s95))
+      grown.copy(graphs = graft.IndexCache.materialize(grown.graphs))
     }
     val queries = emb.filter(col("vec_id") >= s95 && col("vec_id") < s95 + nq)
     searchIndex(index, queries, k, ef)
@@ -164,18 +163,22 @@ object VamanaKnn {
         Seq("dist" -> true, "vec_id" -> true), k))
   }
 
+  /** The memoized shard graphs over `dir`'s base split — the ONE
+    * builder of the `vamana:` family (batch and lifecycle share it).
+    */
+  def cachedIndex(spark: SparkSession, dir: String, shards: Int): VamanaDistIndex =
+    graft.IndexCache.getOrBuild(spark, s"vamana:$dir:$shards") {
+      val ix = buildIndex(ExactKnn.split(spark, dir)._1, shards)
+      ix.copy(graphs = graft.IndexCache.materialize(ix.graphs))
+    }
+
   /** One-shot build + batch search over the held-out queries — the
     * family-standard declared shape.
     */
   def topKBatch(spark: SparkSession, dir: String, k: Int = 10,
       ef: Int = 100, shards: Int = 16): DataFrame = {
-    val (base, queries, _, _) = ExactKnn.split(spark, dir)
-    val index = graft.IndexCache.getOrBuild(spark, s"vamana:$dir:$shards") {
-      val ix = buildIndex(base, shards).persist()
-      ix.graphs.count()
-      ix
-    }
-    searchIndex(index, queries, k, ef)
+    val (_, queries, _, _) = ExactKnn.split(spark, dir)
+    searchIndex(cachedIndex(spark, dir, shards), queries, k, ef)
   }
 
   /** Build → save → load → search with the RELOADED graphs, bit-equal
@@ -183,23 +186,17 @@ object VamanaKnn {
     */
   def topKBatchLifecycle(spark: SparkSession, dir: String, k: Int = 10,
       ef: Int = 100, shards: Int = 16): DataFrame = {
-    val (base, queries, _, _) = ExactKnn.split(spark, dir)
+    val (_, queries, _, _) = ExactKnn.split(spark, dir)
     val path = graft.IndexCache.getOrBuild(spark, s"vamana-ckpt:$dir:$shards") {
-      val index = graft.IndexCache.getOrBuild(spark, s"vamana:$dir:$shards") {
-        val ix = buildIndex(base, shards).persist()
-        ix.graphs.count()
-        ix
-      }
       val p = sys.props.getOrElse("java.io.tmpdir", "/tmp") +
         s"/graft-vamana-lifecycle-${Integer.toHexString(dir.hashCode)}-$shards"
-      saveIndex(index, p)
+      saveIndex(cachedIndex(spark, dir, shards), p)
       p
     }
     val index = graft.IndexCache.getOrBuild(spark,
       s"vamana-reloaded:$dir:$shards") {
-      val ix = loadIndex(spark, path).persist()
-      ix.graphs.count()
-      ix
+      val ix = loadIndex(spark, path)
+      ix.copy(graphs = graft.IndexCache.materialize(ix.graphs))
     }
     searchIndex(index, queries, k, ef)
   }

@@ -96,33 +96,35 @@ object EmbeddingStats {
       .select(col("k_occ").cast("long").as("k_occ"),
         col("n_vectors").cast("long").as("n_vectors"))
 
+  /** Driver cutover of [[mutualKnnClusters]]: mutual-pair edge sets up
+    * to this size are labeled by driver-side union-find. The pair
+    * relation is panel-bounded (<= panel·k rows, the panel under 4000
+    * vectors at every tier), so this sits far above any real input.
+    */
+  private[graft] val MutualPairsDriverMax = 1000000
+
   def mutualKnnClusters(spark: SparkSession, dir: String, k: Int = 5)
       : DataFrame =
     // memoized like the dedup cluster relation ("clusters"): the
     // star-contraction fixpoint is a build (charged to
     // bench_build_mutual_knn with the pair relation it contracts);
     // the declared row serves the persisted labels
-    graft.IndexCache.getOrBuild(spark, s"mutual-knn-clusters:$dir:$k") {
+    graft.IndexCache.getOrPersist(spark, s"mutual-knn-clusters:$dir:$k") {
       import spark.implicits._
       val pairs = graft.knn.ExactKnn.mutualKnnPairs(spark, dir, k)
         .select(col("vec_a").as("u"), col("vec_b").as("v"))
-      // same cutover as Dedup.nearDupClusters: the mutual-pair edge
-      // set is panel-bounded (<= panel·k rows at every tier) — far
-      // under the 10M-edge driver bound — so path-compressed
-      // union-find labels it with zero scheduled stages; the
-      // star-contraction loop stays as the past-cutover leg (identical
-      // output: component = min node id in both)
-      val labeled =
-        if (pairs.count() <= 10000000L)
-          Dedup.unionFindReps(pairs.as[(Long, Long)].collect())
-            .toDF("vec_id", "cluster")
-        else
-          GraphOps.starContractionComponents(pairs)
-            .select(col("node").as("vec_id"), col("component").as("cluster"))
-      val c = labeled
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      c.count()
-      c
+      // one bounded collect decides the leg AND feeds it: at most
+      // cutover + 1 edges reach the driver, and the pair join runs
+      // once. At or under the cutover, path-compressed union-find
+      // labels the edges with zero scheduled stages; past it, the
+      // star-contraction loop runs distributed (identical output:
+      // component = min node id in both)
+      val edges = pairs.as[(Long, Long)].limit(MutualPairsDriverMax + 1).collect()
+      if (edges.length <= MutualPairsDriverMax)
+        Dedup.unionFindReps(edges).toDF("vec_id", "cluster")
+      else
+        GraphOps.starContractionComponents(pairs)
+          .select(col("node").as("vec_id"), col("component").as("cluster"))
     }
 
   /** Pairwise euclidean distances between per-label centroids — the
@@ -373,15 +375,12 @@ object EmbeddingStats {
   private def quantizedVectors(spark: SparkSession, dir: String,
       q: Long): org.apache.spark.sql.Dataset[(Long, Array[Long])] = {
     import spark.implicits._
-    graft.IndexCache.getOrBuild(spark, s"kmeans-quant:$q:$dir") {
-      val d = Tables.embeddings(spark, dir)
+    graft.IndexCache.getOrPersist(spark, s"kmeans-quant:$q:$dir") {
+      Tables.embeddings(spark, dir)
         .select(col("vec_id"),
           transform(col("embedding").cast("array<double>"),
             x => round(x * q, 0).cast("long")).as("qv"))
         .as[(Long, Array[Long])]
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      d.count()
-      d
     }
   }
 

@@ -40,13 +40,16 @@ object HybridSearch {
     * hybrid_end_to_end each re-ran BOTH retrieval legs before this
     * memo (§7.2 duplicated subtrees) — the BM25 scan and the kNN scan
     * now run once per session, and each row takes its own top-k prefix
-    * of the same (rrf desc, doc_id) order.
+    * of the same (rrf desc, doc_id) order. Each term enters the key
+    * length-prefixed, so no two term lists share an entry (a plain
+    * join would key `Seq("a+b")` and `Seq("a", "b")` alike).
     */
   private def rrfFused(spark: SparkSession, dir: String,
       terms: Seq[String], queryIdx: Long, depth: Int,
-      kRrf: Int): DataFrame =
-    graft.IndexCache.getOrBuild(spark,
-        s"hybrid-rrf:$dir:${terms.mkString("+")}:$queryIdx:$depth:$kRrf") {
+      kRrf: Int): DataFrame = {
+    val termsKey = terms.map(t => s"${t.length}#$t").mkString
+    graft.IndexCache.getOrPersist(spark,
+        s"hybrid-rrf:$dir:$termsKey:$queryIdx:$depth:$kRrf") {
       // lexical leg: top-`depth` BM25 docs, ranked (score desc, doc_id)
       val bm = TextOps.bm25TopKExploded(spark, dir, terms, k = depth)
         .withColumn("bm25_rank", row_number().over(
@@ -61,17 +64,15 @@ object HybridSearch {
       // both legs are depth-bounded: the windows above and this join
       // run on k-sized inputs (single-partition windows are fine at
       // depth=100)
-      val fused = bm.join(vec, Seq("doc_id"), "full_outer")
+      bm.join(vec, Seq("doc_id"), "full_outer")
         .select(col("doc_id"),
           round(
             coalesce(lit(1.0) / (col("bm25_rank") + kRrf), lit(0.0)) +
             coalesce(lit(1.0) / (col("vec_rank") + kRrf), lit(0.0)), 6)
             .as("rrf"),
           col("bm25_rank"), col("vec_rank"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      fused.count()
-      fused
     }
+  }
 
   /** The SERVING-SIDE composition flagship — the full RAG retrieval
     * pipeline under ONE plan and one hash gate: lexical BM25 top-`depth`

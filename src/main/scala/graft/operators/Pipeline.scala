@@ -343,11 +343,8 @@ object Pipeline {
     * `bench_build_e2e` (the index-publication discipline).
     */
   def endToEndManifest(spark: SparkSession, dir: String): DataFrame =
-    graft.IndexCache.getOrBuild(spark, s"e2e-manifest:$dir") {
-      val m = endToEndCuration(spark, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      m.count()
-      m
+    graft.IndexCache.getOrPersist(spark, s"e2e-manifest:$dir") {
+      endToEndCuration(spark, dir)
     }
 
   /** The SHARD manifest of [[endToEndCuration]] — the pipeline's final
@@ -739,8 +736,8 @@ object Pipeline {
   private def classifierFeatures(spark: SparkSession, dir: String): DataFrame = {
     val w0 = split(col("text"), " ")
     val wcnt = size(w0).cast("double")
-    graft.IndexCache.getOrBuild(spark, s"lr-feats:$dir") {
-      val f = Tables.documents(spark, dir).select(
+    graft.IndexCache.getOrPersist(spark, s"lr-feats:$dir") {
+      Tables.documents(spark, dir).select(
         col("doc_id"),
         col("lang"),
         when(TextOps.qualityOf(col("text"), w0) >= 0.5, 1.0)
@@ -752,9 +749,6 @@ object Pipeline {
           / wcnt / 10.0, lit(1.0)).as("f3"),
         (size(array_distinct(split(col("text"), " "))).cast("double")
           / wcnt).as("f4"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      f.count()
-      f
     }
   }
 
@@ -762,8 +756,8 @@ object Pipeline {
   private def zOf(w: Array[Double]): Column =
     featIdx.map(j => lit(w(j)) * col(s"f$j")).reduce(_ + _)
 
-  /** The cached training rows as a primitive-array RDD: the gradient
-    * loop below runs CLOSURE aggregates against it, so each of the 50
+  /** The cached training rows as primitive arrays: the gradient loop
+    * below runs CLOSURE aggregates against their RDD, so each of the 50
     * rounds is pure execution. The previous DataFrame form built a
     * fresh `agg` per round (the weights are literals), paying a full
     * Catalyst analyze + codegen cycle per iteration — ~120 ms/round of
@@ -775,15 +769,12 @@ object Pipeline {
     * eval queries are untouched — PipelineSpec pins the weight vector.
     */
   private def classifierRows(spark: SparkSession, dir: String) =
-    graft.IndexCache.getOrBuild(spark, s"lr-rows:$dir") {
+    graft.IndexCache.getOrPersist(spark, s"lr-rows:$dir") {
       import spark.implicits._
-      val r = classifierFeatures(spark, dir)
+      classifierFeatures(spark, dir)
         .select(array(col("y"), col("f0"), col("f1"), col("f2"), col("f3"),
           col("f4")).as("a"))
-        .as[Array[Double]].rdd
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      r.count()
-      r
+        .as[Array[Double]]
     }
 
   /** Spark's `round(x, 0).cast("long")` on DoubleType, replicated
@@ -822,7 +813,7 @@ object Pipeline {
   private[graft] def trainedWeights(spark: SparkSession, dir: String,
       iters: Int, lr: Double): Array[Double] =
     graft.IndexCache.getOrBuild(spark, s"lr-weights:$dir:$iters:$lr") {
-      val rows = classifierRows(spark, dir)
+      val rows = classifierRows(spark, dir).rdd
       val n = rows.count().toDouble
       var w = Array.fill(5)(0.0)
       (1 to iters).foreach { _ =>

@@ -710,7 +710,7 @@ object ScaleTechniques {
     */
   private[graft] def layoutEnvelopes(spark: SparkSession, dir: String,
       layout: String, rowsPerFile: Int = 4096): DataFrame =
-    graft.IndexCache.getOrBuild(spark,
+    graft.IndexCache.getOrPersist(spark,
         s"layout-env:$dir:$layout:$rowsPerFile") {
       val epday = floor(unix_micros(col("l_shipdate")) / lit(86400000000L))
         .cast("long")
@@ -744,15 +744,12 @@ object ScaleTechniques {
           Seq("z" -> true, "l_orderkey" -> true, "l_linenumber" -> true)
         case other => throw new IllegalArgumentException(other)
       }
-      val env = graft.plans.GraftOps.globalRank(li, orderCols, "grk")
+      graft.plans.GraftOps.globalRank(li, orderCols, "grk")
         .withColumn("file_id", ((col("grk") - 1) / rowsPerFile).cast("long"))
         .groupBy(col("file_id"))
         .agg(min(col("epday")).as("dmn"), max(col("epday")).as("dmx"),
           min(col("supp")).as("smn"), max(col("supp")).as("smx"),
           count(lit(1)).as("n_rows"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      env.count()
-      env
     }
 
   def minmaxSkipping(spark: SparkSession, dir: String,

@@ -550,24 +550,22 @@ object TextOps {
         .agg(count(lit(1)).as("nd"))
       val nTrain = docs.filter(!isTest).agg(count(lit(1)).as("n"))
       val vSize = trainWords.agg(countDistinct(col("word")).as("v"))
-      val cls = classTot.join(nDocs, Seq("lang"))
+      val cls = graft.IndexCache.materialize(classTot.join(nDocs, Seq("lang"))
         .crossJoin(nTrain).crossJoin(vSize)
         .select(col("lang").as("c"),
           round(log(col("nd").cast("double") / col("n")) * 1e6, 0)
             .cast("long").as("prior_q"),
           round(log(lit(1.0) / (col("tot") + col("v"))) * 1e6, 0)
             .cast("long").as("unseen_q"),
-          col("tot"), col("v"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val grid = trainWords.select(col("word").as("mword")).distinct()
-        .crossJoin(cls.select(col("c"), col("tot"), col("v")))
-        .join(tf, col("mword") === tf("word") && col("c") === tf("lang"),
-          "left")
-        .select(col("mword"), col("c").as("mlang"),
-          round(log((coalesce(tf("tf"), lit(0L)) + lit(1.0)) /
-            (col("tot") + col("v"))) * 1e6, 0).cast("long").as("qll"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      cls.count(); grid.count()
+          col("tot"), col("v")))
+      val grid = graft.IndexCache.materialize(
+        trainWords.select(col("word").as("mword")).distinct()
+          .crossJoin(cls.select(col("c"), col("tot"), col("v")))
+          .join(tf, col("mword") === tf("word") && col("c") === tf("lang"),
+            "left")
+          .select(col("mword"), col("c").as("mlang"),
+            round(log((coalesce(tf("tf"), lit(0L)) + lit(1.0)) /
+              (col("tot") + col("v"))) * 1e6, 0).cast("long").as("qll")))
       (cls, grid)
     }
 
@@ -638,19 +636,16 @@ object TextOps {
     * query).
     */
   def tokenizedDocs(spark: SparkSession, dir: String): DataFrame =
-    graft.IndexCache.getOrBuild(spark, s"tokens:$dir") {
+    graft.IndexCache.getOrPersist(spark, s"tokens:$dir") {
       // widen BEFORE persist: the single-split fixture scan would
       // otherwise pin every downstream text consumer to one cached
       // partition (one core) for the whole session — CAPPED at 8 (see
       // Dedup.gramHashSets: executor-width memos tax every cheap
       // multi-stage consumer with one task launch per cached partition)
-      val t = graft.plans.GraftOps.widenTo(
+      graft.plans.GraftOps.widenTo(
           Tables.documents(spark, dir)
             .select(col("doc_id"), split(col("text"), " ").as("w")),
           math.min(8, spark.sparkContext.defaultParallelism))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      t.count()
-      t
     }
 
   /** Vocabulary coverage / OOV rate — the tokenizer-health signal:
@@ -1781,9 +1776,9 @@ object TextOps {
     // (it is the ed-join's index; persisting it is the right call at any
     // vocabulary size, and skipping it would recompute the scan +
     // distinct + expansion for each join side)
-    val keyed = graft.IndexCache.getOrBuild(spark,
+    val keyed = graft.IndexCache.getOrPersist(spark,
         s"fuzzy-keyed:$dir:$maxDist") {
-      val k = vocab.as[String].flatMap { w =>
+      vocab.as[String].flatMap { w =>
         val seen = scala.collection.mutable.LinkedHashSet(w)
         var frontier: Set[String] = Set(w)
         var d = 0
@@ -1795,9 +1790,6 @@ object TextOps {
         }
         seen.iterator.map(k => (k, w))
       }.toDF("key", "w")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      k.count()
-      k
     }
     // the verified PAIR relation is read by several declared rows (the
     // pair row itself, the typo dictionary, the cluster labeling) — r10
@@ -1805,17 +1797,14 @@ object TextOps {
     // as the heaviest declared row, so the pairs memoize like `keyed`,
     // charged to bench_build_fuzzy (vocab-bounded: |pairs| << |vocab|²
     // by the deletion-key blocking)
-    graft.IndexCache.getOrBuild(spark, s"fuzzy-pairs:$dir:$maxDist") {
-      val pairs = keyed.toDF("key", "w1")
+    graft.IndexCache.getOrPersist(spark, s"fuzzy-pairs:$dir:$maxDist") {
+      keyed.toDF("key", "w1")
         .join(keyed.toDF("key", "w2"), Seq("key"))
         .filter(col("w1") < col("w2"))
         .select("w1", "w2").distinct()
         .withColumn("dist", levenshtein(col("w1"), col("w2")))
         .filter(col("dist") <= maxDist)
         .select(col("w1"), col("w2"), col("dist").cast("long").as("dist"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      pairs.count()
-      pairs
     }
   }
 
@@ -1887,7 +1876,7 @@ object TextOps {
     */
   def typoLabelDictionary(spark: SparkSession, dir: String,
       maxDist: Int = 2): DataFrame =
-    graft.IndexCache.getOrBuild(spark, s"fuzzy-labels:$dir:$maxDist") {
+    graft.IndexCache.getOrPersist(spark, s"fuzzy-labels:$dir:$maxDist") {
       import spark.implicits._
       val es = fuzzyWordPairs(spark, dir, maxDist)
         .select("w1", "w2").as[(String, String)].collect()
@@ -1906,11 +1895,8 @@ object TextOps {
           if (ra < rb) parent(rb) = ra else parent(ra) = rb
         }
       }
-      val labels = parent.keysIterator.map(v => (v, find(v))).toSeq
+      parent.keysIterator.map(v => (v, find(v))).toSeq
         .toDF("w", "rep0")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      labels.count()
-      labels
     }
 
   private val ngramViewSeq = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -2185,11 +2171,8 @@ object TextOps {
     */
   def winnowingFingerprints(spark: SparkSession, dir: String, k: Int = 5,
       window: Int = 4): DataFrame =
-    graft.IndexCache.getOrBuild(spark, s"winnow-fp:$dir:$k:$window") {
-      val df = winnowingOf(Tables.documents(spark, dir), k, window)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count()
-      df
+    graft.IndexCache.getOrPersist(spark, s"winnow-fp:$dir:$k:$window") {
+      winnowingOf(Tables.documents(spark, dir), k, window)
     }
 
   private[graft] def winnowingOf(docs: DataFrame, k: Int,
@@ -2286,11 +2269,8 @@ object TextOps {
     // consumed by the pair row, the containment row, and BOTH detector
     // cross-checks (the containment-pairs discipline)
     if (k == 5 && window == 4 && maxDf == 64 && minShared == 2)
-      graft.IndexCache.getOrBuild(spark, s"winnow-pairs:$dir") {
-        val df = minedWinnowingPairs(spark, dir, k, window, maxDf, minShared)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        df.count()
-        df
+      graft.IndexCache.getOrPersist(spark, s"winnow-pairs:$dir") {
+        minedWinnowingPairs(spark, dir, k, window, maxDf, minShared)
       }
     else minedWinnowingPairs(spark, dir, k, window, maxDf, minShared)
 

@@ -170,13 +170,9 @@ object VectorStream {
   def hnswTopKStreamed(spark: SparkSession, dir: String, k: Int = 10,
       ef: Int = 100, shards: Int = 16): DataFrame = {
     val staged = stagedEmbeddingsDir(spark, dir)
-    val (base, _, splitAt, _) = graft.knn.ExactKnn.split(spark, dir)
-    // same memo key as the batch path: one build serves both
-    val index = graft.IndexCache.getOrBuild(spark, s"hnsw:$dir:$shards") {
-      val ix = graft.knn.HnswKnn.buildIndex(base, shards).persist()
-      ix.graphs.count()
-      ix
-    }
+    val (_, _, splitAt, _) = graft.knn.ExactKnn.split(spark, dir)
+    // the batch path's memoized build: one build serves both
+    val index = graft.knn.HnswKnn.cachedIndex(spark, dir, shards)
     val outDir = resultDir("graft-hnsw-serve")
     val outSchema = StructType(Seq(
       StructField("qid", LongType), StructField("vec_id", LongType),

@@ -19,6 +19,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * allowlisted here with its bound — "zero unaudited collects" instead
   * of "zero that we remembered". Stale entries fail too, so the list
   * can never drift above the code.
+  *
+  * The same source scan holds the memo discipline: no memo body
+  * persists and counts by hand, and each registered key family is
+  * built at exactly one call site.
   */
 class CollectSiteLintSpec extends AnyFunSuite {
 
@@ -69,10 +73,11 @@ class CollectSiteLintSpec extends AnyFunSuite {
       (1, "transient flat yardstick kernel inside the ONE-TIME " +
         "family:self-topk build (scale path = ANN batch + LSH near-dup)"),
     ("EmbeddingStats.scala",
-      "Dedup.unionFindReps(pairs.as[(Long, Long)].collect())") ->
-      (1, "mutual-pair edges, panel-bounded (<= panel*k rows) and " +
-        "cutover-gated at 10M edges (star-contraction leg above; " +
-        "family:mutual-knn-clusters caps the memoized result)"),
+      "val edges = pairs.as[(Long, Long)].limit(MutualPairsDriverMax + 1).collect()") ->
+      (1, "limit(MutualPairsDriverMax + 1): mutual-pair edges, " +
+        "panel-bounded (<= panel*k rows), cutover 1M edges " +
+        "(star-contraction leg above; family:mutual-knn-clusters " +
+        "caps the memoized result)"),
     // --- pipeline / retrieval ---------------------------------------
     ("Pipeline.scala",
       ".as[(Long, Double, Array[Double])].collect().headOption") ->
@@ -197,6 +202,77 @@ class CollectSiteLintSpec extends AnyFunSuite {
           "collect reused an allowlisted line verbatim; audit it")
       assert(bound.nonEmpty)
     }
+  }
+
+  /** Every memo call site in `src/main` outside IndexCache itself:
+    * (file:line, key families named in its key argument, its body).
+    * The key argument is the balanced `(...)` after the method name;
+    * the body is the balanced `{...}` or `(...)` block that follows.
+    */
+  private def memoSites: Seq[(String, Set[String], String)] = {
+    def close(src: String, open: Int): Int = {
+      val (o, c) = (src(open), if (src(open) == '{') '}' else ')')
+      var depth = 0
+      var i = open
+      while ({
+        if (src(i) == o) depth += 1
+        else if (src(i) == c) depth -= 1
+        depth > 0
+      }) i += 1
+      i
+    }
+    mainSources.filterNot(_.getFileName.toString == "IndexCache.scala")
+      .flatMap { p =>
+        val src = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+        "\\bgetOr(Build|Persist)\\(".r.findAllMatchIn(src).map { m =>
+          val argsEnd = close(src, m.end - 1)
+          val args = src.substring(m.end - 1, argsEnd + 1)
+          var b = argsEnd + 1
+          while (b < src.length && src(b).isWhitespace) b += 1
+          val body =
+            if (b < src.length && (src(b) == '{' || src(b) == '('))
+              src.substring(b, close(src, b) + 1)
+            else ""
+          val line = src.substring(0, m.start).count(_ == '\n') + 1
+          (s"${p.getFileName}:$line",
+            "\"([a-z0-9_-]+):".r.findAllMatchIn(args).map(_.group(1)).toSet,
+            body)
+        }.toList
+      }
+  }
+
+  test("no memo body hand-writes the persist + count pair " +
+      "(Dataset memos go through IndexCache.getOrPersist)") {
+    val sites = memoSites
+    assert(sites.size > 100, s"memo scan found only ${sites.size} sites")
+    val handWritten = sites.collect {
+      case (at, fams, body) if body.contains(".persist(") &&
+          body.contains(".count()") => s"$at ${fams.mkString(",")}"
+    }
+    assert(handWritten.isEmpty,
+      "memo bodies with a hand-written persist + count — use " +
+        "IndexCache.getOrPersist (or IndexCache.materialize for an " +
+        "index or tuple part):\n  " + handWritten.mkString("\n  "))
+  }
+
+  test("every registered key family has exactly one build site") {
+    val sites = memoSites
+    val unnamed = sites.filter(_._2.isEmpty).map(_._1)
+    assert(unnamed.isEmpty,
+      s"memo keys without a literal family prefix: $unnamed")
+    val byFamily = sites.flatMap { case (at, fams, _) => fams.map(_ -> at) }
+      .groupBy(_._1).map { case (f, ats) => f -> ats.map(_._2) }
+    val registered = IndexCache.driverArtifactBounds.keySet
+    val unregistered = byFamily.keySet -- registered
+    assert(unregistered.isEmpty,
+      s"families built but not registered: $unregistered")
+    val stale = registered -- byFamily.keySet
+    assert(stale.isEmpty,
+      s"registered families with no build site (delete them): $stale")
+    val copied = byFamily.filter(_._2.size != 1)
+    assert(copied.isEmpty,
+      "families built at more than one site — route every caller " +
+        "through one builder:\n  " + copied.mkString("\n  "))
   }
 
   test("every family a bound cites is registered in " +

@@ -40,6 +40,21 @@ class HybridSearchSpec extends SparkSpec {
     assert(!diverse.sameElements(plain))
   }
 
+  test("fused-ranking memo: term lists that join alike get their own " +
+      "entries and rankings") {
+    def builds = IndexCache.auditLog.count(_._2 == "hybrid-rrf")
+    def lexicalHits(terms: Seq[String]) =
+      HybridSearch.rrfTopK(spark, sf0001, terms, k = 200).collect()
+        .count(r => !r.isNullAt(r.fieldIndex("bm25_rank")))
+    val before = builds
+    // "join+window" matches no token, so its lexical leg is empty
+    assert(lexicalHits(Seq("join+window")) == 0)
+    assert(lexicalHits(Seq("join", "window")) > 0)
+    // a ':' inside a term no longer shifts the key's later fields
+    assert(lexicalHits(Seq("join:29")) == 0)
+    assert(builds == before + 3)
+  }
+
   test("hybrid end-to-end: provenance consistent, source cap enforced") {
     val rows = HybridSearch.hybridEndToEnd(spark, sf0001)
       .orderBy(col("rank")).collect()
